@@ -9,8 +9,8 @@ physical plan.  The same compiled parts run:
     (parquet/Delta); `run_batch` returns the sink outputs.  This is the
     mode the golden tests and the driver's DuckDB oracle exercise.
   - stream — catalog maps names to streaming DataFrames (Kafka/Delta CDF);
-    the streaming runtime starts one query per sink
-    (pincette_json_streams_spark.streaming.runtime).
+    the streaming runtime starts one query per stream-part sink and one
+    per aggregate part (pincette_json_streams_spark.streaming.runtime).
 
 Join parts: the reference buffers both sides in MongoDB collections and
 re-queries within a millisecond window (App.java:685-709,881-920).  The

@@ -172,10 +172,12 @@ class ChangeLogCollection:
             if not batch_df.isEmpty():
                 self.upsert(batch_df)
 
-        return (
+        writer = (
             df.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint)
         )
+        writer.foreach_batch = write_batch  # for an aggregate fan-out
+        return writer
 
     def compact(self, spark: SparkSession) -> None:
         """Log compaction: rewrite the log as one snapshot commit.  The

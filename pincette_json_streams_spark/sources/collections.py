@@ -183,10 +183,12 @@ class DeltaCollection:
             if not batch_df.isEmpty():
                 self.upsert(batch_df)
 
-        return (
+        writer = (
             df.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint)
         )
+        writer.foreach_batch = write_batch  # for an aggregate fan-out
+        return writer
 
     def compact(self, spark: SparkSession) -> None:
         self._table().optimize().executeCompaction()

@@ -4,8 +4,7 @@ queries.
 The reference runs each app as a chain of reactive-streams processors over
 Kafka consumers/producers (App.java:758-791,1087-1104 — SURVEY.md §3.2).
 Spark-first equivalent: the SAME compiled DataFrame lineage (plans/planner
-compiles batch and streaming identically), executed as one streaming query
-per sink:
+compiles batch and streaming identically), executed as streaming queries:
 
   source (Kafka / file-stream / rate)
     -> compiled pipeline (operators/stages.py — stateless stages are
@@ -13,9 +12,18 @@ per sink:
        to dropDuplicates[WithinWatermark])
     -> sink (Kafka / memory / foreachBatch)
 
+A stream, merge or join part runs one query per sink.  An aggregate part
+runs ONE query: ``foreachBatch`` persists the fold's micro-batch once and
+writes its five outputs from it, so the fold, its checkpoint and its
+state store exist once and the five outputs advance together — the
+Structured Streaming recipe (SIGMOD 2018): a replayable source, one
+offset log, sinks idempotent per epoch.
+
 Delivery: at-least-once with checkpointing, matching the reference's
 contract (docs/index.md:3).  Kafka offsets ⇄ checkpoint state; the
 reference's resume tokens (App.java:1056-1081) ⇄ checkpoint metadata.
+An aggregate part's query records per epoch how many of its five outputs
+have written it, so a replayed epoch does not write them again.
 
 Aggregate parts run ``applyInPandasWithState`` keyed by ``_id``: the
 reference serializes commands per aggregate instance via Kafka key
@@ -37,10 +45,11 @@ from pincette_json_streams_spark.operators.stages import (
 )
 
 __all__ = [
-    "kafka_source", "kafka_sink", "kafka_client_options",
+    "kafka_source", "kafka_sink", "kafka_records", "kafka_client_options",
     "file_stream_catalog", "attach_metrics_listener",
     "collection_change_stream", "StreamingApp", "streaming_aggregate",
     "delay_spool_sink", "delay_release_stream", "redelivery_sink",
+    "FanOutError",
 ]
 
 
@@ -132,6 +141,31 @@ def kafka_source(
     ).select("_key", "v.*")
 
 
+def kafka_records(
+    df: DataFrame, key_col: str = "_id", to_string: bool = False,
+) -> DataFrame:
+    """The Kafka records of a DataFrame: ``key`` from ``key_col``,
+    ``value`` the row document as gzip-CBOR (the reference's wire format)
+    or, with ``to_string=True``, plain JSON — the stream-part
+    ``toString`` flag (docs/serialisation.md).  A ``topic`` column is
+    kept: Kafka sinks route on it natively."""
+    cols = [c for c in df.columns if c not in ("topic",)]
+    value_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
+    if to_string:
+        value = value_json
+    else:
+        from pincette_json_streams_spark.sources.serialisation import (
+            encode_col,
+        )
+        value = encode_col(value_json)
+    return df.select(
+        *( [F.col("topic")] if "topic" in df.columns else [] ),
+        (F.col(key_col).cast("string") if key_col in df.columns
+         else F.lit(None).cast("string")).alias("key"),
+        value.alias("value"),
+    )
+
+
 def kafka_sink(
     df: DataFrame,
     bootstrap: str,
@@ -142,38 +176,22 @@ def kafka_sink(
     to_string: bool = False,
     config: Optional[dict] = None,
 ):
-    """Streaming DataFrame -> Kafka.  Messages serialize as gzip-CBOR of
-    the row document (the reference's wire format); ``to_string=True``
-    produces plain JSON strings instead — the stream-part ``toString``
-    flag (docs/serialisation.md).  A per-row ``topic`` column (from
-    $send/$delay) takes precedence over the fixed topic — Kafka sinks
-    route on it natively."""
-    cols = [c for c in df.columns if c not in ("topic",)]
-    value_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
-    if to_string:
-        value = value_json
-    else:
-        from pincette_json_streams_spark.sources.serialisation import (
-            encode_col,
-        )
-        value = encode_col(value_json)
-    out = df.select(
-        *( [F.col("topic")] if "topic" in df.columns else [] ),
-        (F.col(key_col).cast("string") if key_col in df.columns
-         else F.lit(None).cast("string")).alias("key"),
-        value.alias("value"),
-    )
+    """Streaming DataFrame -> Kafka, as ``kafka_records``.  A per-row
+    ``topic`` column (from $send/$delay) takes precedence over the fixed
+    topic.  The writer carries its projection as ``writer.projection``,
+    so an aggregate part's fan-out can apply it to each micro-batch."""
     # defaults first, config LAST (an explicit checkpointLocation in
     # the client config wins over the positional argument)
     wopts = {"checkpointLocation": checkpoint}
     wopts.update(kafka_client_options(bootstrap, config))
     writer = (
-        out.writeStream.format("kafka")
+        kafka_records(df, key_col, to_string).writeStream.format("kafka")
         .options(**wopts)
         .outputMode(output_mode)
     )
     if topic is not None and "topic" not in df.columns:
         writer = writer.option("topic", topic)
+    writer.projection = lambda d: kafka_records(d, key_col, to_string)
     return writer
 
 
@@ -346,9 +364,11 @@ def streaming_aggregate(
 
     ``applyInPandasWithState`` keyed by ``_id``; state carries the latest
     aggregate JSON.  Emits one row per output message with a ``purpose``
-    discriminator (aggregate/command/event/event-full/reply) — fan out to
-    per-purpose sinks by filtering, exactly like the reference's five
-    output streams (docs/state.md:97-127).
+    discriminator (aggregate/command/event/event-full/reply), the
+    reference's five output streams (docs/state.md:97-127).
+    ``StreamingApp`` runs the fold as one query and fans the five
+    purposes out to their sinks from each persisted micro-batch; a
+    per-purpose view is the fold filtered on ``purpose``.
 
     ``href_lookup`` (href path -> state dict or None) enables jes href
     resolution around the validator+reducer (streaming/hrefs.py) — an
@@ -433,6 +453,187 @@ def streaming_aggregate(
 
 
 # --------------------------------------------------------------------------
+# aggregate fan-out: one query per aggregate part, five outputs
+# --------------------------------------------------------------------------
+
+PURPOSES = ("aggregate", "command", "event", "event-full", "reply")
+
+# writer formats that exist only as streaming sinks
+_STREAM_ONLY_FORMATS = ("foreachBatch", "foreach", "console")
+
+# name of the fan-out query's observation: rows per sink and micro-batch
+FANOUT_OBSERVATION = "json_streams.fanout"
+
+
+class FanOutError(ValueError):
+    """An aggregate part's sink writer that the one-query fan-out cannot
+    turn into a batch write without changing what the sink stores.
+    ``StreamingApp.start`` raises it before any query starts."""
+
+
+def _purpose_view(folded: DataFrame, purpose: str) -> DataFrame:
+    """One of a ``streaming_aggregate`` fold's five output streams."""
+    return folded.filter(F.col("purpose") == purpose).select("_id", "value")
+
+
+def _hadoop_path(spark: SparkSession, *parts):
+    """A Hadoop ``Path`` and its file system: checkpoints and outputs may
+    live on any file system Spark can write to."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(*parts)
+    return path, path.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+class _BatchSink:
+    """The batch write that a sink factory's ``DataStreamWriter`` stands
+    for: the same format, options minus ``checkpointLocation`` and
+    ``queryName``, and partition columns, in append mode.  A ``memory``
+    writer appends to the temp view its ``queryName`` names.  A writer
+    over a projection of the ``df`` it was given carries that projection
+    as ``writer.projection`` (``kafka_sink``); a ``foreachBatch`` writer
+    carries its function as ``writer.foreach_batch`` (collection sinks).
+
+    PySpark keeps none of a writer's settings on the Python side, so they
+    are read from the private fields of the JVM writer
+    (``org.apache.spark.sql.classic.DataStreamWriter`` in Spark 4.1);
+    ``TestAggregateFanOut.test_writer_translation`` pins those names."""
+
+    def __init__(self, spark: SparkSession, name: str, df: DataFrame,
+                 writer):
+        jw = writer._jwrite
+
+        def field(attr):
+            f = jw.getClass().getDeclaredField(attr)
+            f.setAccessible(True)
+            return f.get(jw)
+
+        options = {}
+        it = field("extraOptions").originalMap().iterator()
+        while it.hasNext():
+            kv = it.next()
+            options[kv._1()] = kv._2()
+        # writer options are case-insensitive, as in Spark
+        keys = {k.lower(): k for k in options}
+        self.checkpoint = options.pop(keys.get("checkpointlocation"), None)
+        self.view = options.pop(keys.get("queryname"), None)
+        self.options = options
+        cols = field("partitioningColumns")
+        self.partition_by = [cols.get().apply(i)
+                             for i in range(cols.get().size())] \
+            if cols.isDefined() else []
+        self.format = field("source")
+        self.trigger = field("trigger")
+        self.projection = getattr(writer, "projection", None)
+        self.foreach_batch = getattr(writer, "foreach_batch", None) \
+            if self.format == "foreachBatch" else None
+        self.spark, self.name = spark, name
+
+        if self.format in _STREAM_ONLY_FORMATS and self.foreach_batch is None:
+            raise FanOutError(
+                f"sink {name}: format {self.format!r} has no batch "
+                "equivalent, so an aggregate part's fan-out cannot write it")
+        mode = field("outputMode").toString()
+        if mode != "Append":
+            raise FanOutError(
+                f"sink {name}: output mode {mode}; an aggregate part's "
+                "fan-out appends each micro-batch")
+        ds = field("ds")
+        if not ds.equals(df._jdf) and not (
+                self.projection is not None
+                and ds.queryExecution().analyzed().sameResult(
+                    self.projection(df)._jdf.queryExecution().analyzed())):
+            raise FanOutError(
+                f"sink {name}: the writer writes another DataFrame than the "
+                "one it was given and carries no projection that yields "
+                "it; an aggregate part's fan-out could not reproduce it")
+        path = options.get(keys.get("path"))
+        if path is not None:
+            log, fs = _hadoop_path(spark, path, "_spark_metadata")
+            if fs.exists(log):
+                raise FanOutError(
+                    f"sink {name}: {path} holds a streaming file-sink log "
+                    "(_spark_metadata) from a per-sink query; readers "
+                    "would ignore files appended outside it")
+        if self.format == "memory":
+            if self.view is None:
+                raise FanOutError(f"sink {name}: a memory writer needs a "
+                                  "queryName to name its view")
+            self.rows: list = []
+            spark.createDataFrame([], df.schema) \
+                .createOrReplaceTempView(self.view)
+
+    def write(self, df: DataFrame, epoch: int) -> None:
+        if self.projection is not None:
+            df = self.projection(df)
+        if self.foreach_batch is not None:
+            self.foreach_batch(df, epoch)
+        elif self.format == "memory":
+            self.rows += df.collect()
+            self.spark.createDataFrame(self.rows, df.schema) \
+                .createOrReplaceTempView(self.view)
+        else:
+            w = df.write.format(self.format).options(**self.options)
+            if self.partition_by:
+                w = w.partitionBy(*self.partition_by)
+            w.mode("append").save()
+
+
+def _fan_out(spark: SparkSession, part: str, folded: DataFrame,
+             sinks: list[tuple[str, _BatchSink]]):
+    """The one streaming query of aggregate part ``part`` (its name): its
+    ``foreachBatch`` persists the fold's micro-batch, writes each
+    ``(purpose, sink)`` in turn, keyed by the batch id, and unpersists
+    it.  The observation ``FANOUT_OBSERVATION`` counts each batch's rows
+    per sink, for ``attach_metrics_listener``.
+
+    Its checkpoint is ``fanout`` under the aggregate sink's
+    ``checkpointLocation``.  The sinks are written in a fixed order, so
+    one marker per epoch, ``written/<epoch>``, holds how many have
+    written it; a replayed epoch resumes after them, so every output is
+    written once and all five stand at the same batch.  A finished epoch
+    drops the previous epoch's marker."""
+    agg = sinks[0][1]
+    if agg.checkpoint is None:
+        raise FanOutError(
+            f"sink {agg.name}: needs a checkpointLocation; the aggregate "
+            "part's fan-out query checkpoints under it")
+    differ = [s.name for _, s in sinks if not s.trigger.equals(agg.trigger)]
+    if differ:
+        raise FanOutError(
+            f"sinks {', '.join(differ)}: trigger differs from "
+            f"{agg.name}'s; an aggregate part's five sinks share one query")
+    checkpoint = agg.checkpoint.rstrip("/") + "/fanout"
+    written, fs = _hadoop_path(spark, checkpoint, "written")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+
+    def write_batch(batch: DataFrame, epoch: int) -> None:
+        mark = Path(written, str(epoch))
+        done = 0
+        if fs.exists(mark):
+            stream = fs.open(mark)
+            done = max(0, stream.read())  # -1: cut short while written
+            stream.close()
+        batch.persist()
+        try:
+            for i in range(done, len(sinks)):
+                purpose, sink = sinks[i]
+                sink.write(_purpose_view(batch, purpose), epoch)
+                out = fs.create(mark, True)
+                out.write(i + 1)
+                out.close()
+            fs.delete(Path(written, str(epoch - 1)), False)
+        finally:
+            batch.unpersist()
+
+    observed = folded.observe(FANOUT_OBSERVATION, *[
+        F.count_if(F.col("purpose") == purpose).alias(sink.name)
+        for purpose, sink in sinks])
+    writer = observed.writeStream.foreachBatch(write_batch) \
+        .queryName(part).option("checkpointLocation", checkpoint)
+    writer._jwrite.trigger(agg.trigger)
+    return writer
+
+
+# --------------------------------------------------------------------------
 # app runner
 # --------------------------------------------------------------------------
 
@@ -440,9 +641,21 @@ class StreamingApp:
     """Run an application's parts as streaming queries.
 
     ``catalog`` maps topic names to *streaming* DataFrames (kafka_source /
-    file_stream_catalog).  Each ``toTopic``/``toCollection`` sink becomes
-    one streaming query via ``sink_factory(name, df) -> DataStreamWriter``
-    (tests use memory sinks; production uses kafka_sink/foreachBatch-Delta).
+    file_stream_catalog).  ``sink_factory(name, df) -> DataStreamWriter``
+    gives the writer of each sink in ``sinks`` (tests use memory sinks;
+    production uses kafka_sink/foreachBatch collection sinks).  Each
+    sink of a stream, merge or join part runs as its own query.
+
+    An aggregate part runs as ONE query, named after the part, whose
+    ``foreachBatch`` writes its five sinks (``_fan_out``): each writer
+    becomes the batch write it stands for (``_BatchSink``).  So a writer
+    must write the ``df`` it was given or carry the projection it applies
+    (``kafka_sink`` does), must append, must have a batch equivalent (a
+    ``foreachBatch`` writer carries its function, as collection sinks
+    do), and the five writers must share one trigger; the aggregate
+    sink's writer must set a ``checkpointLocation``.  ``sinks`` still
+    holds the five per-purpose streaming views, for factories that
+    inspect ``df`` and for callers that start a single sink themselves.
     """
 
     def __init__(
@@ -463,6 +676,7 @@ class StreamingApp:
                      if p.get("type") == "aggregate"]
         spec["parts"] = [p for p in spec["parts"]
                          if p.get("type") != "aggregate"]
+        self.folds: dict[str, DataFrame] = {}  # aggregate type -> fold
         self.aggregates: dict[str, DataFrame] = {}
         for part in agg_parts:
             app_name = spec.get("application", "app")
@@ -470,7 +684,7 @@ class StreamingApp:
             full = f"{app_name}-{agg_type}" if "-" not in agg_type \
                 else agg_type
             source = catalog[f"{full}-command"]
-            folded = streaming_aggregate(
+            folded = self.folds[full] = streaming_aggregate(
                 source, full, part.get("commands"),
                 order_col=part.get("orderBy"),
                 script_imports=part.get("scriptImports"),
@@ -478,11 +692,9 @@ class StreamingApp:
                 # href resolution (batch uses resolveHrefs + join)
                 href_lookup=getattr(self.pctx, "href_lookup", None),
             )
-            for purpose in ("aggregate", "command", "event", "event-full",
-                            "reply"):
-                self.aggregates[f"{full}-{purpose}"] = folded.filter(
-                    F.col("purpose") == purpose
-                ).select("_id", "value")
+            for purpose in PURPOSES:
+                self.aggregates[f"{full}-{purpose}"] = _purpose_view(
+                    folded, purpose)
         if spec["parts"]:
             self.app = Application(spec, catalog, self.pctx)
             self.sinks = dict(self.app.run_batch())
@@ -491,20 +703,36 @@ class StreamingApp:
             self.app, self.sinks, self.streams = None, {}, {}
         self.sinks.update(self.aggregates)
         self.streams.update(self.aggregates)
+        self.query_sinks: list[tuple[object, tuple[str, ...]]] = []
 
     def start(
         self,
         sink_factory: Callable[[str, DataFrame], "object"],
         available_now: bool = False,
     ) -> list:
-        """Start one streaming query per sink; returns the queries."""
-        queries = []
-        for name, df in self.sinks.items():
-            writer = sink_factory(name, df)
+        """Start the app's queries and return them: one per sink of a
+        stream, merge or join part, one per aggregate part.
+        ``query_sinks`` pairs each query with the sinks it writes.  All
+        writers are built before the first query starts, so a
+        ``FanOutError`` leaves nothing running."""
+        writers = [(sink_factory(name, df), (name,))
+                   for name, df in self.sinks.items()
+                   if name not in self.aggregates]
+        for full, folded in self.folds.items():
+            sinks = []
+            for purpose in PURPOSES:
+                name = f"{full}-{purpose}"
+                df = self.sinks[name]
+                sinks.append((purpose, _BatchSink(
+                    self.spark, name, df, sink_factory(name, df))))
+            writers.append((_fan_out(self.spark, full, folded, sinks),
+                            tuple(s.name for _, s in sinks)))
+        self.query_sinks = []
+        for writer, names in writers:
             if available_now:
                 writer = writer.trigger(availableNow=True)
-            queries.append(writer.start())
-        return queries
+            self.query_sinks.append((writer.start(), names))
+        return [q for q, _ in self.query_sinks]
 
     def start_delay_redelivery(
         self,
@@ -549,14 +777,15 @@ class StreamingApp:
         With ``collect_metrics=True`` returns per-sink counters drawn
         from the queries' progress events — rows in, batches, and any
         ``observe()`` metrics ($probe's topic-less form) — the
-        reference's per-part message counters (App.java:948-974)."""
+        reference's per-part message counters (App.java:948-974).  The
+        five sinks of an aggregate part share their query's counters."""
         queries = self.start(sink_factory, available_now=True)
         for q in queries:
             q.awaitTermination(timeout)
         if not collect_metrics:
             return None
         out: dict[str, dict] = {}
-        for name, q in zip(self.sinks, queries):
+        for q, names in self.query_sinks:
             rows = 0
             batches = 0
             observed: dict = {}
@@ -565,8 +794,9 @@ class StreamingApp:
                 batches += 1
                 for k, v in (p.get("observedMetrics") or {}).items():
                     observed[k] = v
-            out[name] = {"numInputRows": rows, "numBatches": batches,
-                         "observedMetrics": observed}
+            for name in names:
+                out[name] = {"numInputRows": rows, "numBatches": batches,
+                             "observedMetrics": dict(observed)}
         return out
 
     def run_supervised(
@@ -603,8 +833,11 @@ def attach_metrics_listener(spark: SparkSession, counter, application: str):
     ``OtlpHttpExporter.emit_counter``; the listener runs driver-side on
     every micro-batch progress event and emits ``<query>.in`` with the
     batch's ``numInputRows`` and ``<query>.out`` with the sink's
-    ``numOutputRows`` (skipped when the sink doesn't report).  Returns
-    the listener so callers can ``spark.streams.removeListener`` it."""
+    ``numOutputRows`` (skipped when the sink doesn't report).  An
+    aggregate part's query is named after the part and emits
+    ``<sink>.out`` for each of its five sinks from the rows its
+    micro-batch holds for that sink.  Returns the listener so callers
+    can ``spark.streams.removeListener`` it."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     frame_attrs = {
@@ -627,6 +860,10 @@ def attach_metrics_listener(spark: SparkSession, counter, application: str):
                 if n_out >= 0:  # -1 = sink doesn't report
                     counter("json_streams.messages", n_out,
                             {**frame_attrs, "part": f"{part}.out"})
+                fan = (p.observedMetrics or {}).get(FANOUT_OBSERVATION)
+                for sink, n in (fan.asDict() if fan else {}).items():
+                    counter("json_streams.messages", int(n),
+                            {**frame_attrs, "part": f"{sink}.out"})
             except Exception:
                 pass  # telemetry must never break the stream
 

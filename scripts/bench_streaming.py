@@ -119,7 +119,11 @@ def measure(spark, sf_dir: str) -> dict:
         # stateful event-sourcing aggregate (BASELINE anchor 3: the
         # reference's 50 commands/s/instance design capacity): every
         # event becomes a put command keyed by user, folded through
-        # applyInPandasWithState — versions/_seq/event emission included
+        # applyInPandasWithState — versions/_seq/event emission included.
+        # The part runs as ONE query writing its five sinks.  Figures
+        # recorded while each sink ran its own query measured five folds
+        # per command (BENCH_r13's 9,252/s among them) and do not compare
+        # with later ones.
         cmd_dir = os.path.join(tmp, "agg-cmds")
         (spark.read.parquet(events_path)
          .selectExpr("CAST(user_id AS STRING) AS _id",

@@ -9,12 +9,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from pincette_json_streams_spark.streaming.runtime import (
+    PURPOSES,
+    FanOutError,
     StreamingApp,
+    _BatchSink,
     file_stream_catalog,
+    kafka_sink,
     streaming_aggregate,
 )
 
 PEOPLE_SCHEMA = "_id string, name string, age int, balance double"
+CMD_SCHEMA = ("_id string, _command string, v int, seq_in int, "
+              "_jwt map<string,string>")
 
 
 @pytest.fixture()
@@ -356,6 +362,47 @@ class TestStreamingEdges:
         assert sorted(r["_id"] for r in spark.read.parquet(out2)
                       .collect()) == ["m2", "m3"]
 
+        # an aggregate part is one query, named after the part, writing
+        # five sinks: each sink reports that query's counters, and the
+        # listener counts each sink's rows as <sink>.out
+        import time
+
+        from pincette_json_streams_spark.streaming.runtime import (
+            attach_metrics_listener,
+        )
+        commands = [("a1", "put", 1, 1), ("a2", "put", 2, 2)]
+        cmds = str(tmp_path / "cmds-m")
+        spark.createDataFrame([(*c, {"sub": "system"}) for c in commands],
+                              CMD_SCHEMA).write.parquet(cmds)
+        agg = StreamingApp(spark, {
+            "application": "met", "parts": [
+                {"type": "aggregate", "aggregateType": "acc",
+                 "orderBy": "seq_in"}]},
+            file_stream_catalog(spark, {"met-acc-command": cmds},
+                                {"met-acc-command": CMD_SCHEMA}))
+        got = []
+        listener = attach_metrics_listener(
+            spark, lambda n, v, a: got.append((a["part"], v)), "met")
+        try:
+            metrics = agg.run_until_drained(memory_sink(tmp_path),
+                                            collect_metrics=True)
+            deadline = time.time() + 30  # listener events are async
+            while time.time() < deadline and "met-acc.in" not in dict(got):
+                time.sleep(0.5)
+        finally:
+            spark.streams.removeListener(listener)
+        assert len(agg.query_sinks) == 1
+        assert agg.query_sinks[0][0].name == "met-acc"
+        assert set(metrics) == {f"met-acc-{p}" for p in PURPOSES}
+        for m in metrics.values():
+            assert m["numInputRows"] == 2
+            assert m["numBatches"] >= 1
+        counts, _ = _expected_fold(commands, "met-acc")
+        assert counts["aggregate"] == 2
+        assert {k: v for k, v in got if k.startswith("met-acc")} == {
+            "met-acc.in": 2, **{
+            f"met-acc-{p}.out": counts[p] for p in PURPOSES}}
+
     def test_changelog_kinds_and_resume(self, spark, tmp_path):
         """The real fromCollection contract (App.java:650-683): a
         change-log collection emits insert/replace/delete kinds, and the
@@ -656,6 +703,243 @@ class TestStreamingAggregate:
         # resumed, not replayed: exactly one new state, _seq continues
         assert sorted(a["_seq"] for a in second) == [0, 1]
         assert {a["v"] for a in second} == {1, 2}
+
+
+def _expected_fold(commands, part):
+    """Per-purpose row counts and final aggregates of an in-process
+    ``reduce_commands`` fold over ``(_id, command, v, seq_in)`` rows."""
+    from pincette_json_streams_spark.streaming.aggregate import (
+        reduce_commands,
+    )
+
+    by_id: dict = {}
+    for _id, cmd, v, seq in commands:
+        doc = {"_id": _id, "_command": cmd, "seq_in": seq,
+               "_jwt": {"sub": "system"}}
+        if v is not None:
+            doc["v"] = v
+        by_id.setdefault(_id, []).append(doc)
+    counts = dict.fromkeys(PURPOSES, 0)
+    final = {}
+    for _id, docs in by_id.items():
+        for r in reduce_commands(None, docs, None, part):
+            counts[r["purpose"]] += 1
+            if r["purpose"] == "aggregate":
+                final[_id] = r["doc"]
+    return counts, final
+
+
+def _agg_app(spark, cmd_dir):
+    return StreamingApp(spark, {
+        "application": "fo", "parts": [
+            {"type": "aggregate", "aggregateType": "ord",
+             "orderBy": "seq_in"}]},
+        file_stream_catalog(spark, {"fo-ord-command": cmd_dir},
+                            {"fo-ord-command": CMD_SCHEMA}))
+
+
+def _parquet_sink(out):
+    def factory(name, df):
+        return (df.writeStream.format("parquet")
+                .option("path", f"{out}/{name}")
+                .option("checkpointLocation", f"{out}/_ckpt/{name}"))
+    return factory
+
+
+class TestAggregateFanOut:
+    """An aggregate part runs as one query whose foreachBatch writes the
+    five per-purpose sinks from one persisted micro-batch."""
+
+    def test_writer_translation(self, spark, tmp_path):
+        """The batch write read back from each streaming writer keeps
+        its format, options (minus checkpointLocation/queryName) and
+        partition columns, and kafka_sink's projection.  Fails if a Spark
+        upgrade renames the JVM writer's fields."""
+        df = spark.readStream.format("rate").load()
+        ck = str(tmp_path / "ck")
+        parquet = _BatchSink(spark, "p", df, (
+            df.writeStream.format("parquet")
+            .option("path", str(tmp_path / "p"))
+            .option("compression", "zstd")
+            .option("checkpointLocation", ck)
+            .partitionBy("value").outputMode("append")))
+        assert (parquet.format, parquet.options, parquet.partition_by,
+                parquet.checkpoint, parquet.view) == (
+            "parquet", {"path": str(tmp_path / "p"), "compression": "zstd"},
+            ["value"], ck, None)
+        noop = _BatchSink(spark, "n", df, df.writeStream.format("noop")
+                          .option("checkpointLocation", ck))
+        assert (noop.format, noop.options, noop.partition_by) == \
+            ("noop", {}, [])
+        mem = _BatchSink(spark, "m", df, df.writeStream.format("memory")
+                         .queryName("fanout_translation"))
+        assert (mem.format, mem.options, mem.view, mem.checkpoint) == \
+            ("memory", {}, "fanout_translation", None)
+        assert spark.table("fanout_translation").count() == 0
+        kafka = _BatchSink(spark, "k", df, kafka_sink(
+            df, "broker:9092", "out-topic", ck, key_col="value",
+            to_string=True))
+        assert (kafka.format, kafka.options, kafka.checkpoint) == (
+            "kafka", {"kafka.bootstrap.servers": "broker:9092",
+                      "topic": "out-topic"}, ck)
+        assert kafka.projection(df).columns == ["key", "value"]
+
+    @pytest.mark.parametrize("kind", ["foreachBatch", "foreach", "console",
+                                      "transformed", "complete", "trigger"])
+    def test_writer_without_batch_equivalent_rejected(self, spark, tmp_path,
+                                                      kind):
+        """Writers the fan-out cannot honour: no batch format, another
+        DataFrame with no projection to rebuild it, a non-append output
+        mode, or a trigger that differs between the five sinks."""
+        cmds = str(tmp_path / "cmds")
+        spark.createDataFrame([("o1", "put", 1, 1, {"sub": "system"})],
+                              CMD_SCHEMA).write.parquet(cmds)
+
+        def factory(name, df):
+            w = df.writeStream.format("noop")
+            if kind == "foreachBatch":
+                w = df.writeStream.foreachBatch(lambda b, e: None)
+            elif kind == "foreach":
+                w = df.writeStream.foreach(lambda row: None)
+            elif kind == "console":
+                w = df.writeStream.format("console")
+            elif kind == "transformed":  # another DataFrame than given
+                w = df.select("value").writeStream.format("noop")
+            elif kind == "complete":
+                w = w.outputMode("complete")
+            elif name.endswith("-event"):  # one sink's own trigger
+                w = w.trigger(processingTime="5 seconds")
+            return w.option("checkpointLocation",
+                            str(tmp_path / "ck" / name))
+
+        active = len(spark.streams.active)
+        with pytest.raises(FanOutError, match="fo-ord-aggregate"):
+            _agg_app(spark, cmds).start(factory, available_now=True)
+        assert len(spark.streams.active) == active  # nothing started
+
+    def test_file_target_with_streaming_sink_log_rejected(self, spark,
+                                                          tmp_path):
+        """A target written by the per-sink layout's file sink keeps a
+        _spark_metadata log; readers would ignore batch appends beside
+        it, so start() refuses instead of writing there."""
+        cmds = str(tmp_path / "cmds")
+        spark.createDataFrame([("o1", "put", 1, 1, {"sub": "system"})],
+                              CMD_SCHEMA).write.parquet(cmds)
+        out = tmp_path / "out"
+        (out / "fo-ord-event" / "_spark_metadata").mkdir(parents=True)
+        with pytest.raises(FanOutError, match="_spark_metadata"):
+            _agg_app(spark, cmds).start(_parquet_sink(str(out)),
+                                        available_now=True)
+
+    def test_projected_and_collection_sinks(self, spark, tmp_path):
+        """The production sink shapes: writers over a projection of the
+        given DataFrame (kafka_sink's key/value records) write that
+        projection of each micro-batch, and a collection's foreachBatch
+        sink gets its function called."""
+        from pincette_json_streams_spark.sources.changelog import (
+            ChangeLogCollection,
+        )
+        from pincette_json_streams_spark.streaming.runtime import (
+            kafka_records,
+        )
+
+        commands = [("c1", "put", 1, 1), ("c2", "put", 2, 2)]
+        cmds = str(tmp_path / "cmds")
+        spark.createDataFrame([(*c, {"sub": "system"}) for c in commands],
+                              CMD_SCHEMA).write.parquet(cmds)
+        out = str(tmp_path / "out")
+        coll = ChangeLogCollection(str(tmp_path / "coll"),
+                                   "_id string, value string")
+
+        def factory(name, df):
+            ck = f"{out}/_ckpt/{name}"
+            if name.endswith("-aggregate"):
+                return coll.streaming_sink(df, ck)
+            w = (kafka_records(df, to_string=True).writeStream
+                 .format("parquet").option("path", f"{out}/{name}")
+                 .option("checkpointLocation", ck))
+            w.projection = lambda d: kafka_records(d, to_string=True)
+            return w
+
+        _agg_app(spark, cmds).run_until_drained(factory)
+        counts, final = _expected_fold(commands, "fo-ord")
+        assert {r["_id"]: json.loads(r["value"]) for r in
+                coll.snapshot(spark).collect()} == final
+        for p in ("command", "event", "event-full", "reply"):
+            rows = spark.read.parquet(f"{out}/fo-ord-{p}").collect()
+            assert len(rows) == counts[p], p
+            for r in rows:
+                record = json.loads(r["value"])
+                assert r["key"] == record["_id"]
+                json.loads(record["value"])
+
+    def test_kill_and_restart_writes_each_output_once(self, spark,
+                                                      tmp_path):
+        """Batch 0 fails on the event sink after the aggregate and
+        command sinks wrote it; the re-drain from the checkpoint writes
+        only the rest.  Every output then equals an in-process fold, and
+        all five sinks stand at the same batch, also after a second
+        batch."""
+        import os
+        from pyspark.errors import StreamingQueryException
+
+        cmds = str(tmp_path / "cmds")
+        out = str(tmp_path / "out")
+        batches = [
+            [("o1", "put", 1, 1), ("o2", "put", 5, 2), ("o1", "put", 2, 3),
+             ("o3", "delete", None, 4), ("o2", "put", 5, 5)],
+            [("o1", "put", 7, 6), ("o3", "put", 1, 7)],
+        ]
+
+        def expected(n):
+            return _expected_fold([c for b in batches[:n] for c in b],
+                                  "fo-ord")
+
+        def check(n):
+            counts, final = expected(n)
+            got_final: dict = {}
+            for p in PURPOSES:
+                rows = spark.read.parquet(f"{out}/fo-ord-{p}").collect()
+                assert len(rows) == counts[p], p
+                for r in rows:
+                    doc = json.loads(r["value"])
+                    if p == "aggregate" and doc["_seq"] > got_final.get(
+                            doc["_id"], {"_seq": -1})["_seq"]:
+                        got_final[doc["_id"]] = doc
+            assert got_final == final
+            # one marker, for the last epoch, counting all five sinks
+            written = f"{out}/_ckpt/fo-ord-aggregate/fanout/written"
+            assert [f for f in os.listdir(written)
+                    if not f.startswith(".")] == [str(n - 1)]
+            with open(f"{written}/{n - 1}", "rb") as f:
+                assert f.read() == bytes([len(PURPOSES)])
+
+        def append(rows):
+            spark.createDataFrame(
+                [(*r, {"sub": "system"}) for r in rows],
+                CMD_SCHEMA).write.mode("append").parquet(cmds)
+
+        append(batches[0])
+        os.makedirs(out)
+        blocker = f"{out}/fo-ord-event"
+        with open(blocker, "w") as f:
+            f.write("not a directory")
+        with pytest.raises(StreamingQueryException):
+            _agg_app(spark, cmds).run_until_drained(_parquet_sink(out))
+        counts, _ = expected(1)
+        for p in ("aggregate", "command"):  # written before the failure
+            assert spark.read.parquet(f"{out}/fo-ord-{p}").count() == \
+                counts[p]
+        for p in ("event-full", "reply"):
+            assert not os.path.exists(f"{out}/fo-ord-{p}")
+
+        os.remove(blocker)
+        assert _agg_app(spark, cmds).run_supervised(_parquet_sink(out)) == 0
+        check(1)
+
+        append(batches[1])
+        _agg_app(spark, cmds).run_until_drained(_parquet_sink(out))
+        check(2)
 
 
 class TestStreamingRound3:
